@@ -302,7 +302,9 @@ class _HostLoadGauge:
                     continue
                 if p[0] in ext_names:
                     v = [int(x) for x in p[1:]]
-                    busy += sum(v) - v[3] - v[4] - v[7]  # -idle -iowait -steal
+                    # -idle -iowait -steal, and -guest -guest_nice: the
+                    # kernel already counts guest time in user and nice
+                    busy += sum(v) - v[3] - v[4] - v[7] - sum(v[8:10])
                 elif p[0] in own_names:
                     v = [int(x) for x in p[1:]]
                     steal += v[7]

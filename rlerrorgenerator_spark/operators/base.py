@@ -9,10 +9,11 @@ semantics", `/root/reference/R/1_error.R:48-109`):
 - append lineage rows ``(rid, field, error, before, after, ts)``
   (`/root/reference/R/1_error.R:30-36` ``update_error_record``).
 
-Scale design: candidate sampling is a distributed seeded top-k
-(``orderBy(xxhash64).limit(k)`` → TakeOrderedAndProject, no global
-shuffle), or hash-Bernoulli for the 10^12-row path; the mutation itself is
-either a built-in column expression or one Arrow-batched pandas UDF.
+Scale design: candidate selection is a row predicate — a seeded top-k
+cut (one ``orderBy(xxhash64).limit(k)`` collect → TakeOrderedAndProject,
+no global shuffle) or hash-Bernoulli for the 10^12-row path; the mutation
+is either a built-in column expression or one Arrow-batched pandas UDF,
+applied in one narrow projection that also appends the lineage entry.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from rlerrorgenerator_spark.rng import bernoulli_col, rank_col, seeded_bernoulli
+from rlerrorgenerator_spark.rng import rank_col, seeded_bernoulli
 
 KEY = "rid"
 
@@ -39,13 +40,14 @@ LINEAGE_SCHEMA = T.StructType(
     ]
 )
 
-# Accumulated-lineage column (Bernoulli scale path): instead of one lazy
+# Accumulated-lineage column (both selection paths): instead of one lazy
 # lineage DataFrame branch per stage — each re-running every pandas-UDF
 # stage since the last checkpoint when finally materialized (quadratic
 # re-execution; the round-1 inject-stage scaling killer) — the dirty
 # table carries its own lineage as an array<struct> column appended in
-# the SAME projection as the edit. One pass computes dirty AND lineage;
-# the driver explodes the column once at the end.
+# the SAME projection as the edit. One pass computes dirty AND lineage,
+# every staged table holds the lineage so far, and the driver explodes
+# the column once, from the last staged table.
 LINEAGE_ARRAY_COL = "__lineage"
 LINEAGE_ENTRY_TYPE = (
     "array<struct<field:string,error:string,before:string,after:string,ts:bigint>>"
@@ -127,6 +129,31 @@ def choose_ids(
     return cand.where(seeded_bernoulli(KEY, seed, stage, rate, rng))
 
 
+def topk_predicate(cand: DataFrame, key: str, k: int, seed: int,
+                   stage: str) -> Column:
+    """Exact-k seeded selection as a row predicate.
+
+    ``cand`` holds the eligible rows, unique in ``key``. One small driver
+    collect (TakeOrderedAndProject, one job) fetches the ``k`` smallest
+    ``(rank_col(key, seed, stage), key)``; the predicate holds exactly on
+    rows at or below the k-th of them. Ranks are 64-bit hashes and
+    ``key`` breaks their ties, so the order is total and the selection
+    independent of partitioning. ``k <= 0`` selects nothing without a
+    job; ``k`` at or above the candidate count selects every candidate.
+    """
+    k = int(k)
+    if k <= 0:
+        return F.lit(False)
+    rank = rank_col(key, seed, stage)
+    top = (cand.select(rank.alias("__rank"), F.col(key).alias("__key"))
+           .orderBy("__rank", "__key").limit(k).collect())
+    if len(top) < k:
+        return F.lit(True)
+    rank_k, key_k = top[-1]
+    return (rank < F.lit(rank_k)) | (
+        (rank == F.lit(rank_k)) & (F.col(key) <= F.lit(key_k)))
+
+
 def select_rows(
     df: DataFrame,
     eligible: Column,
@@ -136,109 +163,68 @@ def select_rows(
     exact: bool = True,
     rate: float | None = None,
     rng: str = "xxhash",
-) -> DataFrame | Column:
-    """Row selection for a transform: either a key DataFrame (exact-k via
-    seeded top-k) or — the scale path — a plain boolean COLUMN predicate
-    (eligible ∧ hash-Bernoulli). The predicate form lets ``apply_cell_edit``
-    run the entire stage as one narrow projection: no joins, no per-stage
-    job, whole chains of transforms fuse into a single codegen stage.
-    Same selected set as ``choose_ids(exact=False)`` (same hash)."""
+) -> Column:
+    """Row selection for a transform, as a boolean COLUMN predicate.
+
+    exact=True  → ``eligible`` ∧ the seeded top-k of ``topk_predicate``
+                  (one driver collect per call).
+    exact=False → ``eligible`` ∧ hash-Bernoulli(rate): no job at all, the
+                  10^12-row path (same set as ``choose_ids(exact=False)``).
+
+    Either way ``apply_cell_edit`` runs the stage as one narrow
+    projection: no joins, and consecutive transforms fuse into a single
+    codegen stage.
+    """
     if exact:
-        return choose_ids(df, eligible, k, seed, stage, True, rate)
+        return eligible & topk_predicate(df.where(eligible), KEY, k, seed, stage)
     assert rate is not None
     return eligible & seeded_bernoulli(KEY, seed, stage, rate, rng)
+
+
+def append_lineage(selected: Column, *entries: Column) -> Column:
+    """The accumulated-lineage column with ``entries`` appended on
+    selected rows."""
+    arr = F.col(LINEAGE_ARRAY_COL)
+    return F.when(selected, F.concat(arr, F.array(*entries))).otherwise(arr)
 
 
 def apply_cell_edit(
     df: DataFrame,
     col: str,
-    selected: DataFrame | Column,
+    selected: Column,
     new_value: Column,
     error: str,
     ts: int,
     lineage_after: Column | None = None,
 ) -> tuple[DataFrame, DataFrame | None]:
-    """Overwrite ``col`` with ``new_value`` on selected rows; emit lineage.
+    """Overwrite ``col`` with ``new_value`` where ``selected`` holds; emit
+    lineage.
 
-    Two selection forms:
-
-    - ``selected`` is a COLUMN predicate (Bernoulli scale path): the edit
-      is one narrow projection — ``__sel`` flag, ``__after`` value,
-      conditional overwrite. Zero joins, zero jobs; consecutive transforms
-      fuse into one codegen stage. ``new_value`` may reference ``__sel``
-      (pandas UDFs use it to skip unselected rows cheaply, since Spark
-      evaluates UDFs under ``when`` unconditionally).
-    - ``selected`` is a key DataFrame (exact-k path): ``new_value`` is
-      evaluated ONLY over the semi-joined selected rows, then the k-row
-      edit set joins back (broadcast under the session threshold/AQE).
+    The edit is one narrow projection — ``__sel`` flag, ``__after``
+    value, conditional overwrite — on both the exact-k and the Bernoulli
+    path (``select_rows`` returns a predicate for each). ``new_value``
+    may reference ``__sel``: pandas UDFs use it to skip unselected rows
+    cheaply, since Spark evaluates UDFs under ``when`` unconditionally.
 
     Lineage: when ``df`` carries the accumulated-lineage array column
-    (Bernoulli path; see ``LINEAGE_ARRAY_COL``), the entry is appended in
-    the SAME projection and the returned lineage DataFrame is ``None``;
-    otherwise an explicit lineage DataFrame is returned.
-    ``lineage_after`` overrides the recorded ``after`` value (e.g.
-    ``make_missing`` records ``""`` per the reference convention).
+    (``mess_data`` adds it; see ``LINEAGE_ARRAY_COL``), the entry is
+    appended in the SAME projection and the returned lineage DataFrame is
+    ``None``. Direct calls on a table without the column get an explicit
+    lineage DataFrame instead. ``lineage_after`` overrides the recorded
+    ``after`` value (e.g. ``make_missing`` records ``""`` per the
+    reference convention).
     """
-    accumulate = LINEAGE_ARRAY_COL in df.columns
-
-    if isinstance(selected, Column):
-        tmp = df.withColumn("__sel", selected).withColumn("__after", new_value)
-        after_rec = lineage_after if lineage_after is not None else F.col("__after")
-        if accumulate:
-            entry = lineage_entry(col, error, F.col(col), after_rec, ts)
-            out = tmp.withColumn(
-                LINEAGE_ARRAY_COL,
-                F.when(F.col("__sel"),
-                       F.array_append(F.col(LINEAGE_ARRAY_COL), entry))
-                .otherwise(F.col(LINEAGE_ARRAY_COL)),
-            )
-            out = out.withColumn(
-                col, F.when(F.col("__sel"), F.col("__after")).otherwise(F.col(col))
-            ).drop("__sel", "__after")
-            return out, None
-        lineage_new = tmp.where(F.col("__sel")).select(
-            F.col(KEY).alias("rid"),
-            F.lit(col).alias("field"),
-            F.lit(error).alias("error"),
-            F.col(col).cast("string").alias("before"),
-            after_rec.cast("string").alias("after"),
-            F.lit(ts).cast("long").alias("ts"),
-        )
-        out = tmp.withColumn(
-            col, F.when(F.col("__sel"), F.col("__after")).otherwise(F.col(col))
-        ).drop("__sel", "__after")
-        return out, lineage_new
-
-    sel_rows = df.join(selected.select(KEY), KEY, "left_semi")
-    edited = sel_rows.withColumn("__after", new_value).select(
-        F.col(KEY),
-        F.col(col).cast("string").alias("__before"),
-        F.col("__after"),
-    )
-    after_rec = (lineage_after if lineage_after is not None
-                 else F.col("__after").cast("string"))
-    patch = edited.select(KEY, F.lit(True).alias("__sel"), "__after")
-    out = df.join(patch, KEY, "left")
-    if accumulate:
-        entry = lineage_entry(col, error, F.col(col), after_rec, ts)
-        out = out.withColumn(
-            LINEAGE_ARRAY_COL,
-            F.when(F.col("__sel").isNotNull(),
-                   F.array_append(F.col(LINEAGE_ARRAY_COL), entry))
-            .otherwise(F.col(LINEAGE_ARRAY_COL)),
-        )
-        lineage_new = None
+    tmp = df.withColumn("__sel", selected).withColumn("__after", new_value)
+    after_rec = lineage_after if lineage_after is not None else F.col("__after")
+    entry = lineage_entry(col, error, F.col(col), after_rec, ts)
+    lineage_new = None
+    if LINEAGE_ARRAY_COL in df.columns:
+        tmp = tmp.withColumn(LINEAGE_ARRAY_COL, append_lineage(F.col("__sel"), entry))
     else:
-        lineage_new = edited.select(
-            F.col(KEY).alias("rid"),
-            F.lit(col).alias("field"),
-            F.lit(error).alias("error"),
-            F.col("__before").alias("before"),
-            after_rec.alias("after"),
-            F.lit(ts).cast("long").alias("ts"),
-        )
-    out = (
-        out.withColumn(col, F.when(F.col("__sel"), F.col("__after")).otherwise(F.col(col)))
-        .drop("__sel", "__after")
-    )
+        lineage_new = tmp.where(F.col("__sel")).select(
+            F.col(KEY).alias("rid"), entry.alias("e")
+        ).select("rid", "e.*")
+    out = tmp.withColumn(
+        col, F.when(F.col("__sel"), F.col("__after")).otherwise(F.col(col))
+    ).drop("__sel", "__after")
     return out, lineage_new

@@ -69,10 +69,11 @@ def date_swap(df: DataFrame, lineage: DataFrame, n_errors: int,
             & (F.month(d) != F.dayofmonth(d))
         )
         sel = select_rows(df, eligible, per_col, seed, st, exact, rate, rng=rng)
-        # SELF-GUARDED make_date: Catalyst may push this projection below
-        # the selection semi-join (expressions are assumed pure), so under
-        # ANSI mode the swapped date must be total over ALL rows — the
-        # lazy CASE WHEN keeps make_date off the ineligible branch.
+        # SELF-GUARDED make_date: the edit value is a projection that
+        # Spark may evaluate on every row, not only the selected ones
+        # (expressions are assumed pure), so under ANSI mode the swapped
+        # date must be total over ALL rows — the lazy CASE WHEN keeps
+        # make_date off the ineligible branch.
         swapped = F.when(eligible, F.make_date(F.year(d), F.dayofmonth(d), F.month(d))) \
                    .otherwise(d)
         new = _rebuild(col, is_ts, swapped)
@@ -111,7 +112,7 @@ def date_transpose(df: DataFrame, lineage: DataFrame, n_errors: int,
                 & (newday <= F.dayofmonth(F.last_day(d)))
             )
             # guarded: projection may be evaluated on ineligible rows
-            # (pushed below the selection join) — see date_swap note
+            # — see date_swap note
             new_date = F.when(eligible, F.make_date(F.year(d), F.month(d), newday)) \
                         .otherwise(d)
         else:

@@ -7,14 +7,17 @@ rows ``(error, amount, col_names, arguments)``; ``amount<1`` is a fraction
 function name via a registry; ``add_duplicates`` always held for last
 (`R/1_error.R:115-126`).
 
-Spark lifecycle (SURVEY.md §3.1): each config row appends lazy DataFrame
-plan (narrow ops + small joins + at most one pandas UDF); because each
-stage references its input ~3× (candidate scan, edit set, patch join),
-un-checkpointed plans grow ~3^k — the driver therefore checkpoints each
-stage (``localCheckpoint`` volatile, or durable parquet/Iceberg via a
-``CheckpointManager``), exactly the per-stage snapshot discipline of the
-reference (`benchmarking/utils.R:504-641`) and the north rule's resumable
-stages.
+Spark lifecycle (SURVEY.md §3.1): each config row appends one narrow
+projection (selection predicate, edit, lineage entry appended to the
+in-row ``LINEAGE_ARRAY_COL``) to the plan, on both selection paths.
+Exact-k selection costs one small top-k collect per operator column;
+Bernoulli selection costs nothing. The exact path snapshots each stage
+(``localCheckpoint`` volatile, or durable parquet/Iceberg via a
+``CheckpointManager``) — the per-stage snapshot discipline of the
+reference (`benchmarking/utils.R:504-641`) and the north rule's
+resumable stages — so every staged table holds the lineage so far. The
+lineage table is exploded once, from the last staged table, before the
+row-generating ops that read it.
 """
 
 from __future__ import annotations
@@ -136,38 +139,40 @@ def mess_data(
         if c not in targeted and c not in key_cols and t == "binary"
     ]
     dirty = clean.drop(*heavy) if heavy else clean
+    # Both selection paths: lineage accumulates as an array column inside
+    # the SAME narrow projections as the edits, so staging dirty stages
+    # its lineage too and nothing re-derives an edit to recover it. The
+    # column is exploded into the lineage table right before the
+    # row-generating ops (which read lineage for eligibility).
+    dirty = dirty.withColumn(
+        LINEAGE_ARRAY_COL, F.expr("array()").cast(LINEAGE_ENTRY_TYPE)
+    )
     lineage = empty_lineage(spark)
-    # Bernoulli scale path: lineage accumulates as an array column inside
-    # the SAME narrow projections as the edits (one pass total — no lazy
-    # per-stage lineage branches re-running the UDF chain on
-    # materialization, which was quadratic in stage count). The column is
-    # exploded into the lineage table right before the row-generating ops
-    # (which read lineage for eligibility).
-    if not exact:
-        dirty = dirty.withColumn(
-            LINEAGE_ARRAY_COL, F.expr("array()").cast(LINEAGE_ENTRY_TYPE)
-        )
+    mgr = ckpt or CheckpointManager(spark)
     ordered = [r for r in config if r.error not in ROW_OPS] + [
         r for r in config if r.error in ROW_OPS
     ]
     n_cell_ops = sum(1 for r in ordered if r.error not in ROW_OPS)
     ts = 0
-    since_ckpt = 0
-    lineage_lazy_branches = 0
+    unstaged = 0  # operators applied since dirty was last staged
+
+    def split_lineage(name: str):
+        # materialize the cell-edit chain once unless the last operator's
+        # stage already did, then read the lineage off that table
+        nonlocal dirty, lineage, unstaged
+        if unstaged:
+            dirty = mgr.stage(dirty, name)
+            unstaged = 0
+        lineage = lineage.unionByName(_explode_lineage(dirty))
+        dirty = dirty.drop(LINEAGE_ARRAY_COL)
+
     for row in ordered:
         fn = REGISTRY.get(row.error)
         if fn is None:
             raise KeyError(f"unknown error transform {row.error!r}; "
                            f"registered: {sorted(REGISTRY)}")
-        if not exact and ts == n_cell_ops and LINEAGE_ARRAY_COL in dirty.columns:
-            # entering ROW_OPS: materialize dirty once (single pass over
-            # the whole fused cell-edit chain), extract the lineage table
-            mgr = ckpt or CheckpointManager(spark)
-            dirty = mgr.stage(dirty, f"dirty_cells_ts{ts:03d}")
-            lineage = lineage.unionByName(_explode_lineage(dirty))
-            lineage_lazy_branches += 1
-            dirty = dirty.drop(LINEAGE_ARRAY_COL)
-            since_ckpt = 0
+        if ts == n_cell_ops and LINEAGE_ARRAY_COL in dirty.columns:
+            split_lineage(f"dirty_cells_ts{ts:03d}")
         amount = row.amount * amount_mult
         if row.amount < 1:
             # fractional row: calibration can scale it past 1.0 — clamp the
@@ -203,22 +208,6 @@ def mess_data(
                 kwargs[key] = lookups[key]
         if row.error == "add_duplicates":
             kwargs["clean"] = clean.drop(*heavy) if heavy else clean
-        if lineage_lazy_branches and (
-            row.error == "add_duplicates"
-            or (row.error == "make_missing" and exact)
-        ):
-            # these two transforms READ the accumulated lineage (prior-error
-            # exclusion / errored-id sampling). Left lazy, that read
-            # re-derives every per-stage lineage branch (a join off each
-            # checkpointed dirty stage) — and the final lineage staging
-            # re-derives them all AGAIN. Materialize the accumulated table
-            # once right before the first consumer; the table is tiny
-            # (rows = injected errors, ~3% of the corpus) so the extra
-            # snapshot is noise while the re-derivation it kills scales
-            # with stage count × corpus size.
-            mgr = ckpt or CheckpointManager(spark)
-            lineage = mgr.stage(lineage, f"lineage_ts{ts:03d}")
-            lineage_lazy_branches = 0
         ts += 1
         dirty, ln = fn(
             dirty, lineage, n_errors, col_names,
@@ -227,51 +216,42 @@ def mess_data(
         )
         if ln is not None:
             lineage = lineage.unionByName(ln)
-            lineage_lazy_branches += 1
         if verbose:
             # Bernoulli path selects by rate and leaves n_errors unset —
             # printing n=0 there misreads as "no errors injected"
             amt = (f"rate={rate:.4f}" if not n_errors and rate
                    else f"n={n_errors}")
             print(f"[mess_data] {ts:02d} {row.error} {amt}")
-        since_ckpt += 1
-        if since_ckpt >= checkpoint_every and (exact or ts >= n_cell_ops):
-            # exact path: per-stage snapshot discipline (plans reference
-            # their input ~3x via the patch joins). Bernoulli path: the
+        unstaged += 1
+        if unstaged >= checkpoint_every and (exact or ts >= n_cell_ops):
+            # exact path: per-stage snapshot discipline; each stage's
+            # top-k collect then scans a staged table instead of
+            # re-running the edits before it. Bernoulli path: the
             # cell-edit chain is ONE fused narrow projection — no
             # intermediate checkpoints needed or taken before the
             # dirty_cells materialization above.
-            mgr = ckpt or CheckpointManager(spark)
             dirty = mgr.stage(dirty, f"dirty_ts{ts:03d}")
-            # lineage is NOT checkpointed per stage: once dirty is staged,
-            # each lineage branch is one shallow join off a materialized
-            # table, and the lazy union stays cheap — per-stage lineage
-            # materialization would double the job count.
-            since_ckpt = 0
-    if not exact and LINEAGE_ARRAY_COL in dirty.columns:
+            unstaged = 0
+    if LINEAGE_ARRAY_COL in dirty.columns:
         # program had no row ops: extract lineage now
-        mgr = ckpt or CheckpointManager(spark)
-        dirty = mgr.stage(dirty, "dirty_cells_final")
-        lineage = lineage.unionByName(_explode_lineage(dirty))
-        dirty = dirty.drop(LINEAGE_ARRAY_COL)
-    mgr = ckpt or CheckpointManager(spark)
+        split_lineage("dirty_cells_final")
     if heavy:
         wide = clean.select("orig_url", *heavy)
         dirty = dirty.join(wide, "orig_url", "left")
     durable = mgr.base_dir is not None
-    if exact or durable or heavy:
+    if heavy or (unstaged and (exact or durable)):
         dirty = mgr.stage(dirty, "dirty_final")
-    # else: volatile Bernoulli path — dirty_cells is already materialized
-    # and the row-op tail is a few shallow ops over checkpointed parents;
-    # re-materializing the whole table would double the memory-write cost
-    # of injection for no plan-depth benefit.
+    # else: dirty is already a staged table, or the volatile Bernoulli
+    # row-op tail — a few shallow ops over checkpointed parents, where
+    # re-materializing the whole table would double the memory-write
+    # cost of injection for no plan-depth benefit.
     if exact or durable:
         lineage = mgr.stage(lineage, "lineage_final")
-    # else: volatile Bernoulli lineage is the staged lineage_ts table
+    # else: volatile Bernoulli lineage is one explode of a staged table
     # plus at most two shallow row-op branches — every consumer
-    # (label_pairs, audits) re-derives those branches in one cheap pass
-    # off materialized parents; a second full staging measured 5.7s at
-    # 4 cores for zero plan-depth benefit.
+    # (label_pairs, audits) re-derives those in one cheap pass off
+    # materialized parents; a second full staging measured 5.7s at 4
+    # cores for zero plan-depth benefit.
     return dirty, lineage
 
 

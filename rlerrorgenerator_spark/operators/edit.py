@@ -22,10 +22,8 @@ result is independent of partitioning.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from pyspark.sql import Column
 
 from rlerrorgenerator_spark.operators.base import (
     KEY,
@@ -50,30 +48,13 @@ def _seed_series_to_u64(seed64: pd.Series):
     return seed64.to_numpy(dtype="int64", na_value=0).view("uint64")
 
 
-def _make_udf(fn, seed: int, stage: str):
+def _make_udf(fn):
     """Wrap a scalar (draws, str) -> str editor as an Arrow-batched pandas
-    UDF over (value, seed64). The per-row seed is derived JVM-side
-    (``seed64_col``); the UDF mixes it into draw streams with VECTORIZED
-    splitmix64 — no per-row hashing or Generator construction (the
-    round-1 per-row blake2b+default_rng cost, ~15-20µs/row)."""
-    @F.pandas_udf("string")
-    def udf(val: pd.Series, seed64: pd.Series) -> pd.Series:
-        u0, u1, u2 = draw_streams(_seed_series_to_u64(seed64), 3)
-        out = []
-        for v, a, b, c in zip(val.to_numpy(), u0, u1, u2):
-            if v is None:
-                out.append(None)
-                continue
-            out.append(fn((int(a), int(b), int(c)), str(v)))
-        return pd.Series(out, dtype="object")
-
-    return udf
-
-
-def _make_udf_flagged(fn, seed: int, stage: str):
-    """Flag-gated variant for the inline (Bernoulli) path: Spark evaluates
-    pandas UDFs under when() unconditionally, so the selection flag is an
-    input and unselected rows skip the edit entirely."""
+    UDF over (value, selected, seed64). The per-row seed is derived
+    JVM-side (``seed64_col``); the UDF mixes it into draw streams with
+    VECTORIZED splitmix64 — no per-row hashing or Generator construction.
+    Spark evaluates pandas UDFs under when() unconditionally, so the
+    selection flag is an input and unselected rows skip the edit."""
     @F.pandas_udf("string")
     def udf(val: pd.Series, flag: pd.Series, seed64: pd.Series) -> pd.Series:
         u0, u1, u2 = draw_streams(_seed_series_to_u64(seed64), 3)
@@ -109,27 +90,22 @@ def _make_udf_md5(fn):
 
 def _apply_editor(df, col, scalar_fn, error_name, per_col, seed, st, ts,
                   exact, rate, eligible, rng_mode: str = "xxhash"):
-    """Shared skeleton: selection (exact-k DataFrame or inline predicate)
-    + UDF wiring + apply_cell_edit."""
+    """Shared skeleton: selection predicate + UDF wiring + apply_cell_edit."""
     sel = select_rows(df, eligible, per_col, seed, st, exact, rate, rng=rng_mode)
-    if isinstance(sel, Column):
-        # ship NULL instead of the (KB-scale) value for unselected rows:
-        # the Arrow exchange then carries ~rate×|col| bytes instead of
-        # |col| bytes — at a few % selection this cuts the Python
-        # round-trip ~20×, the measured bandwidth bound of the inject
-        # stage. Selected ⇒ eligible ⇒ non-null, so NULL is unambiguous.
-        gated = F.when(F.col("__sel"), F.col(col))
-        if rng_mode == MD5_RNG:
-            udf = _make_udf_md5(scalar_fn)
-            draws = [md5_u64_str(draw_token(seed, st, f"d{i}"), KEY)
-                     for i in range(3)]
-            new_value = udf(gated, F.col("__sel"), *draws)
-        else:
-            udf = _make_udf_flagged(scalar_fn, seed, st)
-            new_value = udf(gated, F.col("__sel"), seed64_col(KEY, seed, st))
+    # ship NULL instead of the (KB-scale) value for unselected rows:
+    # the Arrow exchange then carries ~rate×|col| bytes instead of
+    # |col| bytes — at a few % selection this cuts the Python
+    # round-trip ~20×, the measured bandwidth bound of the inject
+    # stage. Selected ⇒ eligible ⇒ non-null, so NULL is unambiguous.
+    gated = F.when(F.col("__sel"), F.col(col))
+    if rng_mode == MD5_RNG:
+        udf = _make_udf_md5(scalar_fn)
+        draws = [md5_u64_str(draw_token(seed, st, f"d{i}"), KEY)
+                 for i in range(3)]
+        new_value = udf(gated, F.col("__sel"), *draws)
     else:
-        udf = _make_udf(scalar_fn, seed, st)
-        new_value = udf(F.col(col), seed64_col(KEY, seed, st))
+        udf = _make_udf(scalar_fn)
+        new_value = udf(gated, F.col("__sel"), seed64_col(KEY, seed, st))
     return apply_cell_edit(df, col, sel, new_value, error_name, ts)
 
 

@@ -10,12 +10,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyspark.sql import Column
-
 from rlerrorgenerator_spark.operators.base import (
     KEY,
+    LINEAGE_ARRAY_COL,
+    append_lineage,
     apply_cell_edit,
-    choose_ids,
+    lineage_entry,
     register,
     select_rows,
     split_across_cols,
@@ -104,41 +104,34 @@ def make_missing(df: DataFrame, lineage: DataFrame, n_errors: int,
     """Null out the field on rows not already errored on that field.
 
     The reference reads its own lineage to exclude prior-errored ids
-    (`R/4_abbreviations.R:112-117`) — here an anti-join against the
-    accumulated lineage table; records ``after=""``  (`:120-127`).
+    (`R/4_abbreviations.R:112-117`) — here ``F.exists`` over the in-row
+    accumulated lineage, so the stage stays one narrow projection; a
+    direct call on a table without that column flags the prior ids from
+    the explicit ``lineage`` table instead. Records ``after=""``
+    (`:120-127`).
     """
-    from rlerrorgenerator_spark.operators.base import LINEAGE_ARRAY_COL
-    from rlerrorgenerator_spark.rng import seeded_bernoulli
-
     per_col = split_across_cols(n_errors, len(col_names))
     lineages = []
     for col in col_names:
         st = f"{stage}|missing|{col}"
         col_type = dict(df.dtypes)[col]
-        if not exact and LINEAGE_ARRAY_COL in df.columns:
-            # scale path: prior-error exclusion read straight off the
-            # accumulated-lineage column — no anti-join, stays one fused
-            # narrow projection like every other Bernoulli-path edit
-            eligible = (
-                F.col(col).isNotNull()
-                & ~F.exists(LINEAGE_ARRAY_COL, lambda e: e["field"] == col)
-                & seeded_bernoulli(KEY, seed, st, rate, rng)
-            )
-            df, ln = apply_cell_edit(
-                df, col, eligible, F.lit(None).cast(col_type), "make_missing",
-                ts, lineage_after=F.lit(""),
-            )
+        if LINEAGE_ARRAY_COL in df.columns:
+            prior = F.exists(LINEAGE_ARRAY_COL, lambda e: e["field"] == col)
         else:
-            prior = lineage.where(F.col("field") == col) \
-                           .select(F.col("rid").alias(KEY)).distinct()
-            cand = df.join(prior, KEY, "left_anti")
-            eligible = F.col(col).isNotNull()
-            sel = choose_ids(cand, eligible, per_col, seed, st, exact, rate, rng=rng)
-            # reference logs after="" rather than NA (`R/4_abbreviations.R:123`)
-            df, ln = apply_cell_edit(
-                df, col, sel, F.lit(None).cast(col_type), "make_missing",
-                ts, lineage_after=F.lit(""),
-            )
+            ids = lineage.where(F.col("field") == col).select(
+                F.col("rid").alias(KEY), F.lit(True).alias("__prior")
+            ).distinct()
+            df = df.join(ids, KEY, "left")
+            prior = F.col("__prior").isNotNull()
+        eligible = F.col(col).isNotNull() & ~prior
+        sel = select_rows(df, eligible, per_col, seed, st, exact, rate, rng=rng)
+        # reference logs after="" rather than NA (`R/4_abbreviations.R:123`)
+        df, ln = apply_cell_edit(
+            df, col, sel, F.lit(None).cast(col_type), "make_missing",
+            ts, lineage_after=F.lit(""),
+        )
+        if "__prior" in df.columns:
+            df = df.drop("__prior")
         lineages.append(ln)
     return df, _union(lineages)
 
@@ -163,60 +156,29 @@ def swap_fields(df: DataFrame, lineage: DataFrame, n_errors: int,
             & (F.col(c1).cast("string") != F.col(c2).cast("string"))
         )
         sel = select_rows(df, eligible, per_pair, seed, st, exact, rate, rng=rng)
-        if isinstance(sel, Column):
-            from rlerrorgenerator_spark.operators.base import (
-                LINEAGE_ARRAY_COL,
-                lineage_entry,
-            )
-
-            flagged = df.withColumn("__sel", sel)
-            if LINEAGE_ARRAY_COL in df.columns:
-                # accumulate mode: both swap entries appended in-projection
-                e1 = lineage_entry(c1, "swap_fields", F.col(c1), F.col(c2), ts)
-                e2 = lineage_entry(c2, "swap_fields", F.col(c2), F.col(c1), ts)
-                flagged = flagged.withColumn(
-                    LINEAGE_ARRAY_COL,
-                    F.when(F.col("__sel"),
-                           F.concat(F.col(LINEAGE_ARRAY_COL), F.array(e1, e2)))
-                    .otherwise(F.col(LINEAGE_ARRAY_COL)),
-                )
-                patch = None
-            else:
-                patch = flagged.where("__sel").select(
-                    KEY, F.col(c1).alias("__v1"), F.col(c2).alias("__v2")
-                )
-            out = (
-                flagged.withColumn(
-                    "__n1", F.when(F.col("__sel"), F.col(c2)).otherwise(F.col(c1))
-                )
-                .withColumn(c2, F.when(F.col("__sel"), F.col(c1)).otherwise(F.col(c2)))
-                .withColumn(c1, F.col("__n1"))
-                .drop("__sel", "__n1")
-            )
+        flagged = df.withColumn("__sel", sel)
+        if LINEAGE_ARRAY_COL in df.columns:
+            # accumulate mode: both swap entries appended in-projection
+            flagged = flagged.withColumn(LINEAGE_ARRAY_COL, append_lineage(
+                F.col("__sel"),
+                lineage_entry(c1, "swap_fields", F.col(c1), F.col(c2), ts),
+                lineage_entry(c2, "swap_fields", F.col(c2), F.col(c1), ts),
+            ))
         else:
-            patch = (
-                df.join(sel.select(KEY), KEY, "left_semi")
-                .select(KEY, F.col(c1).alias("__v1"), F.col(c2).alias("__v2"))
+            swapped = flagged.where("__sel")
+            for a, b in ((c1, c2), (c2, c1)):
+                lineages.append(swapped.select(
+                    F.col(KEY).alias("rid"),
+                    lineage_entry(a, "swap_fields", F.col(a), F.col(b), ts).alias("e"),
+                ).select("rid", "e.*"))
+        df = (
+            flagged.withColumn(
+                "__n1", F.when(F.col("__sel"), F.col(c2)).otherwise(F.col(c1))
             )
-            out = (
-                df.join(patch, KEY, "left")
-                .withColumn(c1, F.coalesce(F.col("__v2"), F.col(c1)))
-                .withColumn(c2, F.coalesce(F.col("__v1"), F.col(c2)))
-                .drop("__v1", "__v2")
-            )
-        if patch is not None:
-            for fld, before, after in ((c1, "__v1", "__v2"), (c2, "__v2", "__v1")):
-                lineages.append(
-                    patch.select(
-                        F.col(KEY).alias("rid"),
-                        F.lit(fld).alias("field"),
-                        F.lit("swap_fields").alias("error"),
-                        F.col(before).cast("string").alias("before"),
-                        F.col(after).cast("string").alias("after"),
-                        F.lit(ts).cast("long").alias("ts"),
-                    )
-                )
-        df = out
+            .withColumn(c2, F.when(F.col("__sel"), F.col(c1)).otherwise(F.col(c2)))
+            .withColumn(c1, F.col("__n1"))
+            .drop("__sel", "__n1")
+        )
     return df, _union(lineages)
 
 

@@ -163,6 +163,23 @@ def test_checkpoint_format_env_gate(spark, tmp_path, monkeypatch):
     assert mgr.exists("stage1")
 
 
+def test_checkpoint_file_uri_written_once(spark, tmp_path, monkeypatch):
+    """Skip-if-exists resolves through the Hadoop FileSystem, so a stage
+    under a ``file://`` base_dir is written once and skipped after."""
+    from rlerrorgenerator_spark.checkpoint import CheckpointManager
+
+    monkeypatch.delenv("SPARK_GRAFT_CKPT_FORMAT", raising=False)
+    mgr = CheckpointManager(spark, f"file://{tmp_path}/ck")
+    assert not mgr.exists("s1")
+    first = mgr.stage(spark.range(3), "s1")
+    assert mgr.exists("s1")
+    assert (tmp_path / "ck" / "s1" / "_SUCCESS").exists()
+    # a second stage under the same name is skipped: the stored rows stay
+    again = mgr.stage(spark.range(10, 15), "s1")
+    assert sorted(r.id for r in again.collect()) == [0, 1, 2]
+    assert again.schema == first.schema
+
+
 def test_osa_distance_known_values():
     """dl/osa vs lev divergence on adjacent transpositions (tpose edits)."""
     from rlerrorgenerator_spark.functions.similarity import osa_distance

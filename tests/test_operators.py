@@ -216,3 +216,39 @@ def test_calibration_reaches_target(spark, pages_small):
     realized = calc_perc_id_err(lineage, pages_small.count())
     assert realized >= 0.15
     assert mult > 1.0
+
+
+def test_exact_predicate_matches_orderby_limit(spark, pages_small):
+    """Exact-k as a predicate selects the same rows as the seeded top-k
+    ``orderBy(rank_col).limit(k)``, for k = 0 and k > eligible too."""
+    from rlerrorgenerator_spark.operators.base import KEY, select_rows
+    from rlerrorgenerator_spark.rng import rank_col
+
+    eligible = F.pmod(F.xxhash64("rid"), F.lit(3)) == 0
+    n_eligible = pages_small.where(eligible).count()
+    assert 0 < n_eligible < pages_small.count()
+    for k in (0, 1, 17, n_eligible, n_eligible + 25):
+        sel = select_rows(pages_small, eligible, k, 3, "topk", exact=True)
+        got = {r.rid for r in pages_small.where(sel).select(KEY).collect()}
+        want = {r.rid for r in pages_small.where(eligible)
+                .orderBy(rank_col(KEY, 3, "topk")).limit(k).collect()}
+        assert got == want
+        assert len(got) == min(k, n_eligible)
+
+
+def test_exact_swap_then_make_missing_skips_swapped(spark, pages_small):
+    """In-row lineage: exact ``make_missing`` after an exact swap of the
+    same field never hits a swapped row, and still nulls exactly k."""
+    cfg = [
+        ErrorConfigRow("swap_fields", 0.3, ["url", "lang"]),
+        ErrorConfigRow("make_missing", 0.5, ["lang"]),
+    ]
+    dirty, lineage = mess_data(pages_small, cfg, seed=17, exact=True)
+    swapped = {r.rid for r in lineage.where(F.col("error") == "swap_fields").collect()}
+    nulled = {r.rid for r in lineage.where(F.col("error") == "make_missing").collect()}
+    assert len(swapped) == 90
+    assert len(nulled) == 150
+    assert not (swapped & nulled)
+    lang = {r.rid: r.lang for r in dirty.select("rid", "lang").collect()}
+    assert all(lang[rid] is None for rid in nulled)
+    assert all(lang[rid] is not None for rid in swapped)

@@ -16,6 +16,25 @@ from rlerrorgenerator_spark.sources.persons import (
 )
 
 
+# The reference person program (also the persons benchmark's program).
+PERSON_PROGRAM = [
+    ErrorConfigRow("indel", 0.05, ["fname", "lname"]),
+    ErrorConfigRow("repl", 0.05, ["fname"], {"charset": "keyboard"}),
+    ErrorConfigRow("real_to_nicknames", 0.08, ["fname"], {"lookup": "lookup"}),
+    ErrorConfigRow("first_letter_abbreviate", 0.03, ["mname"]),
+    ErrorConfigRow("make_missing", 0.03, ["mname"]),
+    ErrorConfigRow("married_name_change", 0.04, ["lname"],
+                   {"surnames": "surnames", "sex": "gender_code"}),
+    ErrorConfigRow("date_swap", 0.03, ["dob"]),
+    ErrorConfigRow("date_replace", 0.03, ["dob"], {"token": "day"}),
+    ErrorConfigRow("make_twins", 5, []),
+]
+
+
+def _lookups(spark):
+    return {"lookup": nickname_lookup(spark), "surnames": surname_dim(spark)}
+
+
 @pytest.fixture(scope="module")
 def persons(spark):
     base = synth_persons(spark, 1200, seed=42)
@@ -41,24 +60,34 @@ def test_get_bdays_twins(persons):
 
 @pytest.fixture(scope="module")
 def person_linkage(spark, persons):
-    cfg = [
-        ErrorConfigRow("indel", 0.05, ["fname", "lname"]),
-        ErrorConfigRow("repl", 0.05, ["fname"], {"charset": "keyboard"}),
-        ErrorConfigRow("real_to_nicknames", 0.08, ["fname"], {"lookup": "lookup"}),
-        ErrorConfigRow("first_letter_abbreviate", 0.03, ["mname"]),
-        ErrorConfigRow("make_missing", 0.03, ["mname"]),
-        ErrorConfigRow("married_name_change", 0.04, ["lname"],
-                       {"surnames": "surnames", "sex": "gender_code"}),
-        ErrorConfigRow("date_swap", 0.03, ["dob"]),
-        ErrorConfigRow("date_replace", 0.03, ["dob"], {"token": "day"}),
-        ErrorConfigRow("make_twins", 5, []),
-    ]
-    lookups = {
-        "lookup": nickname_lookup(persons.sparkSession),
-        "surnames": surname_dim(persons.sparkSession),
-    }
-    dirty, lineage = mess_data(persons, cfg, seed=23, lookups=lookups)
+    dirty, lineage = mess_data(persons, PERSON_PROGRAM, seed=23,
+                               lookups=_lookups(persons.sparkSession))
     return persons, dirty, lineage
+
+
+def test_exact_injection_job_budget(spark, persons, tmp_path):
+    """Exact-k selection is one top-k collect per operator column and the
+    lineage rides in the staged tables: the whole durable program stays
+    within five Spark jobs per config row."""
+    from rlerrorgenerator_spark.checkpoint import CheckpointManager
+
+    lookups = _lookups(spark)
+    sc = spark.sparkContext
+    group = "exact-injection-job-budget"
+    sc.setJobGroup(group, "mess_data job budget")
+    try:
+        dirty, lineage = mess_data(
+            persons, PERSON_PROGRAM, seed=29, lookups=lookups, exact=True,
+            ckpt=CheckpointManager(spark, str(tmp_path / "ckpt")))
+        # the status store is fed asynchronously; count every job started
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs <= 5 * len(PERSON_PROGRAM), jobs
+    assert dirty.count() == persons.count()
+    assert lineage.where(F.col("error") == "make_missing").count() == 36
 
 
 def test_person_error_injection(person_linkage):
