@@ -24,6 +24,19 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
+def is_committed(spark: SparkSession, path: str, fmt: str = "parquet") -> bool:
+    """Whether a table write to ``path`` committed. Resolved through the
+    Hadoop ``FileSystem`` of ``path``, so it works for local, ``file://``,
+    HDFS and object-store URIs alike (``os.path.exists`` sees only plain
+    local paths)."""
+    # path-based Iceberg tables mark commit state in metadata/, not a
+    # _SUCCESS flag
+    marker = "metadata" if fmt == "iceberg" else "_SUCCESS"
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(os.path.join(path, marker))
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
+
+
 class CheckpointManager:
     """Write-once staged tables under ``base_dir``; resume = read-back.
 
@@ -44,18 +57,10 @@ class CheckpointManager:
         return os.path.join(self.base_dir, name)
 
     def exists(self, name: str) -> bool:
-        """Whether stage ``name`` was committed. Resolved through the
-        Hadoop ``FileSystem`` of ``base_dir``, so skip-if-exists works for
-        local, ``file://``, HDFS and object-store URIs alike."""
+        """Whether stage ``name`` was committed (see :func:`is_committed`)."""
         if self.base_dir is None:
             return False
-        # path-based Iceberg tables mark commit state in metadata/, not a
-        # _SUCCESS flag
-        marker = "metadata" if self.fmt == "iceberg" else "_SUCCESS"
-        jvm = self.spark._jvm
-        path = jvm.org.apache.hadoop.fs.Path(os.path.join(self._path(name), marker))
-        fs = path.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return fs.exists(path)
+        return is_committed(self.spark, self._path(name), self.fmt)
 
     def load(self, name: str, schema: StructType | None = None) -> DataFrame:
         reader = self.spark.read.format(self.fmt)

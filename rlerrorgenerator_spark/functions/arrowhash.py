@@ -180,8 +180,9 @@ def _shingle_hashes(flat_th: np.ndarray, n_tok: np.ndarray,
     """k-gram hashes over consecutive token hashes.
 
     Rows with fewer than k tokens are zero-padded up to k so every row
-    yields ≥1 shingle (mirrors the expression path's try_element_at-null
-    semantics closely enough for a blocking/sampling hash).
+    yields ≥1 shingle (mirrors the exact_shingles expression path's
+    try_element_at-null semantics closely enough for a blocking/sampling
+    hash).
     -> (flat shingle hashes uint64, per-row shingle counts int64)."""
     n = len(n_tok)
     if n == 0:
@@ -235,10 +236,30 @@ def sampled_shingles32(texts: pa.Array, *, shingle_k: int = 4,
                        seed: int = 42,
                        sample_threshold: int = 32) -> tuple[pa.Array, pa.Array]:
     """Per-row (sampled 32-bit shingle-hash list, use_sample flag) — the
-    scoring side's pair-shuffle payload. Rows with ≥ sample_threshold
-    shingles ship the deterministic 1-in-4 subsample (h%4==0 over the
-    truncated value, matching both sides); shorter rows ship the full
-    32-bit set (see features.py's boundary rationale)."""
+    scoring side's pair-shuffle payload.
+
+    Sampling: rows with ≥ ``sample_threshold`` shingles ship the
+    deterministic 1-in-4 subsample (keep h % 4 == 0). When BOTH sides are
+    sampled the pair Jaccard over the samples is an unbiased estimate of
+    the true shingle Jaccard (MinHash-style subsampling), and the pair
+    shuffle ships 4× fewer array bytes — the dominant bandwidth cost of
+    scoring.
+
+    Boundary: shorter rows ship the FULL set. Near the 20-token body
+    floor a doc has ~17 shingles → ~4 sampled, a high-variance (or empty
+    → Jaccard forced to 0) estimate exactly where the gated content
+    evidence matters most; below 32 shingles the bandwidth saving is
+    noise, so exact Jaccard costs nothing. The flag records which form
+    shipped so ``features.add_features`` can symmetrize mixed
+    full-vs-sampled pairs by filtering the full side to the same sample.
+
+    Truncation: hashes ship as 32 bits (the arithmetic high word of the
+    64-bit hash), halving the dominant scoring-shuffle payload; at
+    ≤ ~400 shingles/doc the extra collision probability is
+    ~n²/2³³ ≈ 2e-5, invisible next to the 1-in-4 sampling variance. The
+    subsample keys off the TRUNCATED value, so the pair-time
+    symmetrization (pmod over the shipped ints) selects exactly the
+    elements the row side kept."""
     flat_th, n_tok = _token_hashes(texts, lower=False, pattern=" ",
                                    regex=False, seed=seed)
     flat_sh, n_sh = _shingle_hashes(flat_th, n_tok, shingle_k, seed)

@@ -8,22 +8,20 @@ generalize to three strategies over the pages domain, unioned + deduped:
    sort-merge/broadcast picked by Catalyst/AQE;
 2. sorted-neighborhood over a sort key — Spark's global ``orderBy`` is a
    range-partitioned sort (scales out), neighbors via banded self-join;
-3. MinHash-LSH on text shingles — shingling, hashing and band signatures
-   all with built-in expressions (``sequence``/``transform``/``xxhash64``
-   /``array_min``), so the whole thing is JVM-side and deterministic.
+3. MinHash-LSH on text shingles — signatures come from one vectorized
+   ``mapInArrow`` kernel (``functions/arrowhash.py``); banding and the
+   bucket join are built-in expressions.
 
 Skew: pathological blocks (empty/boilerplate text → one giant LSH bucket)
-are capped at ``max_block_size`` before the pair join — the explicit
+are capped before the pair join by a per-key count window — the explicit
 skew-key handling the north rule asks for (AQE skew-join splitting covers
-residual imbalance).
+residual imbalance in the joins).
 
 Conventions: the clean side exposes ``rid_a`` (its url), the dirty side
 ``rid_b`` (its row key). Output: ``(rid_a, rid_b, block)``.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -48,49 +46,33 @@ def _cap_blocks_two_sided(a: DataFrame, b: DataFrame, keys: list[str],
     """Drop keys whose group exceeds ``max_block_size`` on either side —
     the explicit skew guard in front of every block equi-join.
 
-    Default (window form): each side filters itself with a per-key count
-    window — ``count() OVER (PARTITION BY keys)`` then
-    ``count ≤ max_block_size``. No driver participation at all: no
-    hot-list collect, no broadcast build, no checkpoint, and the window's
-    hash exchange on ``keys`` is exactly the partitioning the downstream
-    pair join needs, so Catalyst reuses it (one exchange per side total).
-    Each side has a single consumer, so the double-evaluation trap that
-    forced lazy localCheckpoints on the broadcast form (signature
-    aggregation re-run under the build AND probe sides) cannot occur.
+    Each side filters itself with a per-key count window —
+    ``count() OVER (PARTITION BY keys)`` then ``count ≤ max_block_size``.
+    No driver participation: no hot-list collect, no broadcast build, no
+    checkpoint, and the window's hash exchange on ``keys`` is exactly the
+    partitioning the downstream pair join needs, so Catalyst reuses it
+    (one exchange per side total). A key hot on one side contributes no
+    pairs, because its rows vanish from that side of the equi-join.
     Per-side capping also matches the cross-engine oracles' SQL
     (``bkey NOT IN (SELECT … HAVING count > N)`` per side) row-for-row.
 
-    ``SPARK_GRAFT_WINDOW_CAPS=0`` restores the broadcast-blacklist form
-    (one union-side count + one broadcast + anti-joins, lazy-checkpointed
-    per side) for A/B measurement. Pair-set equivalence of the two forms:
-    a key hot on one side contributes no pairs either way, because its
-    rows vanish from that side of the equi-join."""
-    if os.environ.get("SPARK_GRAFT_WINDOW_CAPS", "1") == "1":
-        def cap(side: DataFrame) -> DataFrame:
-            w = Window.partitionBy(*keys)
-            return (
-                side.withColumn("__bc", F.count(F.lit(1)).over(w))
-                .where(F.col("__bc") <= max_block_size)
-                .drop("__bc")
-            )
+    Cost on a hot key: every row of that key still crosses the window
+    exchange into ONE task before it is dropped, and AQE skew-join
+    splitting does not apply to windows — a mega-block of boilerplate
+    rows lands on a single core."""
+    w = Window.partitionBy(*keys)
 
-        return cap(a), cap(b)
-    a = a.localCheckpoint(eager=False)
-    b = b.localCheckpoint(eager=False)
-    u = (
-        a.select(*keys).withColumn("__side", F.lit("a"))
-        .unionByName(b.select(*keys).withColumn("__side", F.lit("b")))
-    )
-    hot = (
-        u.groupBy(*keys, "__side").count()
-        .where(F.col("count") > max_block_size)
-        .select(*keys).distinct()
-    )
-    hot = F.broadcast(hot)
-    return (a.join(hot, keys, "left_anti"), b.join(hot, keys, "left_anti"))
+    def cap(side: DataFrame) -> DataFrame:
+        return (
+            side.withColumn("__bc", F.count(F.lit(1)).over(w))
+            .where(F.col("__bc") <= max_block_size)
+            .drop("__bc")
+        )
+
+    return cap(a), cap(b)
 
 
-def exact_blocks(clean: DataFrame, dirty: DataFrame, key_exprs: dict[str, Column] | None = None,
+def exact_blocks(clean: DataFrame, dirty: DataFrame,
                  max_block_size: int = 100) -> DataFrame:
     """Equi-join candidates on each normalized key (reference's single-field
     blocking unions, `utils.R:548-586`).
@@ -100,20 +82,19 @@ def exact_blocks(clean: DataFrame, dirty: DataFrame, key_exprs: dict[str, Column
     equi-join on (kname, bkey) replace the per-key pipelines — the same
     pairs, with one scan of each input instead of one per key and ~4×
     fewer serial job launches (checkpoint/broadcast barriers)."""
-    if key_exprs is None:
-        key_exprs = {
-            "url_norm": normalize_url("url"),
-            # pre-truncate before the whitespace-collapse regex: the key is
-            # 24 chars, so running the regex over the full multi-KB text
-            # burns ~3x the whole strategy's cost for bytes the key never
-            # sees (measured 28s -> 10s at 240k rows). 1000 raw chars
-            # always cover 24 collapsed chars unless a text opens with
-            # >976 whitespace chars — and such a text has no meaningful
-            # 24-char prefix to block on anyway.
-            "text_prefix": F.substring(
-                F.regexp_replace(F.substring("text", 1, 1000), r"\s+", " "),
-                1, 24),
-        }
+    key_exprs = {
+        "url_norm": normalize_url("url"),
+        # pre-truncate before the whitespace-collapse regex: the key is
+        # 24 chars, so running the regex over the full multi-KB text
+        # burns ~3x the whole strategy's cost for bytes the key never
+        # sees (measured 28s -> 10s at 240k rows). 1000 raw chars
+        # always cover 24 collapsed chars unless a text opens with
+        # >976 whitespace chars — and such a text has no meaningful
+        # 24-char prefix to block on anyway.
+        "text_prefix": F.substring(
+            F.regexp_replace(F.substring("text", 1, 1000), r"\s+", " "),
+            1, 24),
+    }
 
     def keyed(side: DataFrame, rid_col: str, alias: str) -> DataFrame:
         structs = F.array(*[
@@ -138,7 +119,6 @@ def exact_blocks(clean: DataFrame, dirty: DataFrame, key_exprs: dict[str, Column
 
 
 def sorted_neighborhood_blocks(clean: DataFrame, dirty: DataFrame,
-                               sort_expr: Column | None = None,
                                window: int = 3) -> DataFrame:
     """Sorted-neighborhood: union both sides, range-sort on the key, pair
     rows within ``window`` positions across sides.
@@ -149,8 +129,7 @@ def sorted_neighborhood_blocks(clean: DataFrame, dirty: DataFrame,
     also work); adjacent bands are joined so every ≤window neighborhood is
     covered by (band, band+1).
     """
-    if sort_expr is None:
-        sort_expr = normalize_url("url")
+    sort_expr = normalize_url("url")
     a = clean.select(F.col("url").alias("rid"), sort_expr.alias("skey"),
                      F.lit("a").alias("side"))
     b = dirty.select(F.col("rid").alias("rid"), sort_expr.alias("skey"),
@@ -204,93 +183,32 @@ def sorted_neighborhood_blocks(clean: DataFrame, dirty: DataFrame,
 def minhash_signature(df: DataFrame, text_col: str, id_col: str,
                       n_hashes: int = 16, shingle_k: int = 5,
                       seed: int = 1) -> DataFrame:
-    """MinHash signature per row: min over shingles of xxhash64(salt_i, s)
-    for each of n_hashes salts. All built-in expressions.
+    """MinHash signature per row: ``(__id, mh_0 … mh_{n_hashes-1})``, the
+    min over word shingles of each of ``n_hashes`` hash functions.
 
-    Shape: explode shingles -> ONE groupBy with n_hashes min-aggregates.
-    The array-expression formulation (array_min(transform(...)) per hash)
-    looks shuffle-free but Catalyst's projection collapse inlines the
-    shingle construction into every one of the n_hashes expressions,
-    recomputing it 16x per row — measured 122s vs ~10s at 80k rows. The
-    min-aggs combine map-side so the exploded shuffle stays small.
+    One ``mapInArrow`` (``functions/arrowhash.py``) computes token
+    hashes, shingle hashes and all segment-mins as numpy passes over the
+    Arrow buffers — the equivalent built-in form is ~18 interpreted
+    higher-order-function passes per row (``ArrayTransform`` is
+    CodegenFallback). MinHash needs no distinct shingles: min over a
+    multiset equals min over its set."""
+    from pyspark.sql.types import LongType, StructField, StructType
 
-    Universal-hashing trick: ONE xxhash64 over the shingle *string*, then
-    each of the n_hashes functions derives by re-hashing that 8-byte long
-    — string bytes are read once, not n_hashes times. Long-to-long xxhash
-    keeps it overflow-safe under ANSI mode (an affine multiply would
-    throw on overflow).
-
-    Shingling shape: project the token split as a bound attribute, explode
-    POSITIONS, then slice+concat per position-row. Building shingle
-    arrays with array_distinct is O(tokens²) in string compares (measured
-    112s for 12M shingles vs 1.3s this way) — and MinHash doesn't need
-    distinct: min over a multiset equals min over its set."""
-    k = max(2, shingle_k - 1)  # word shingles (see _shingles rationale)
-    if os.environ.get("SPARK_GRAFT_ARROW_KERNELS", "1") != "0":
-        # Vectorized fast path (functions/arrowhash.py): the expression
-        # form below is ~18 interpreted HOF passes per row (ArrayTransform
-        # is CodegenFallback — JFR measured it at ~35% of the 4-core
-        # scaling leg's samples together with the scoring transforms).
-        # One mapInArrow computes token hashes, shingle hashes and all
-        # n_hashes segment-mins as numpy passes over the Arrow buffers.
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        from rlerrorgenerator_spark.functions.arrowhash import (
-            minhash_signature_batches,
-        )
-
-        pre = df.select(F.col(id_col).alias("__id"),
-                        F.coalesce(text_col, F.lit("")).alias("__text"))
-        out_schema = StructType(
-            [pre.schema.fields[0]]
-            + [StructField(f"mh_{i}", LongType(), True)
-               for i in range(n_hashes)]
-        )
-        return pre.mapInArrow(
-            lambda it: minhash_signature_batches(
-                it, text_col="__text", n_hashes=n_hashes,
-                shingle_k=k, seed=seed),
-            out_schema,
-        )
-    # STRING-FREE, SHUFFLE-FREE signatures: hash tokens once, build the
-    # per-row shingle-hash array (multi-arg xxhash64 over k consecutive
-    # token hashes — no slice/concat string building), then each of the
-    # n_hashes signature values is an array_min over a per-hash rehash of
-    # that BOUND array. Zero shuffle, perfect cache locality per row —
-    # the earlier explode → groupBy(id) form built ~32MB hash-agg maps
-    # per task (LLC-thrashing at high parallelism), and the historic
-    # warning about the array-expression form applied to STRING shingle
-    # construction being inlined n_hashes times; with 8-byte hash
-    # elements the rehash is ~10ns/element.
-    toks = df.select(
-        F.col(id_col).alias("__id"),
-        F.transform(
-            # split directly on the whitespace-run pattern — one regex
-            # pass instead of collapse-then-split (identical token arrays,
-            # verified empirically; ~30% cheaper at 240k rows)
-            F.split(F.lower(text_col), r"\s+"),
-            lambda t: F.xxhash64(t),
-        ).alias("__th"),
+    from rlerrorgenerator_spark.functions.arrowhash import (
+        minhash_signature_batches,
     )
-    n = F.greatest(F.size("__th") - F.lit(k - 1), F.lit(1))
-    sh = toks.withColumn(
-        "__sh",
-        F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: F.xxhash64(
-                F.lit(f"mh{seed}"),
-                *[F.try_element_at(F.col("__th"), i + j) for j in range(k)],
-            ),
-        ),
+
+    k = max(2, shingle_k - 1)  # tokens per word shingle
+    pre = df.select(F.col(id_col).alias("__id"),
+                    F.coalesce(text_col, F.lit("")).alias("__text"))
+    out_schema = StructType(
+        [pre.schema.fields[0]]
+        + [StructField(f"mh_{i}", LongType(), True) for i in range(n_hashes)]
     )
-    return sh.select(
-        "__id",
-        *[
-            F.array_min(
-                F.transform(F.col("__sh"), lambda h, i=i: F.xxhash64(F.lit(i), h))
-            ).alias(f"mh_{i}")
-            for i in range(n_hashes)
-        ],
+    return pre.mapInArrow(
+        lambda it: minhash_signature_batches(
+            it, text_col="__text", n_hashes=n_hashes, shingle_k=k, seed=seed),
+        out_schema,
     )
 
 
@@ -325,8 +243,6 @@ def minhash_blocks(clean: DataFrame, dirty: DataFrame, text_col: str = "text",
             F.col("__id").alias(rid_alias), F.explode(structs).alias("bk")
         ).select(rid_alias, F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"))
 
-    # (band, bkey) grouping ≡ bkey grouping here (bkey is band-salted),
-    # and the two-sided cap needs one count + one broadcast for both sides
     ka, kb = _cap_blocks_two_sided(band_keys(sig_a, "rid_a"),
                                    band_keys(sig_b, "rid_b"),
                                    ["band", "bkey"], max_block_size)
@@ -346,8 +262,9 @@ def minhash_blocks_verified(clean: DataFrame, dirty: DataFrame,
     → band equi-join → hot-bucket cap → pair dedup), but hashing with the
     md5-u64 discipline of ``plans.dedup.minhash_signatures`` so an
     independent SQL engine reproduces every bucket key bit-identically.
-    The xxhash fast path stays the production blocking; this variant is
-    what the driver's cross-engine oracle exercises (``er_blocking_minhash``).
+    The Arrow-kernel :func:`minhash_blocks` stays the production blocking;
+    this variant is what the driver's cross-engine oracle exercises
+    (``er_blocking_minhash``).
 
     The hot-bucket cap groups on (band, bkey) — the md5 band keys carry
     no band salt, so capping on ``bkey`` alone (safe for the salted
@@ -377,22 +294,9 @@ def minhash_blocks_verified(clean: DataFrame, dirty: DataFrame,
         ).select(rid_alias, F.col("bk.band").alias("band"),
                  F.col("bk.bkey").alias("bkey"))
 
-    def cap(keyed: DataFrame) -> DataFrame:
-        # per-key count window, same discipline as _cap_blocks_two_sided's
-        # default form: single consumer of the signature plan (no
-        # double-evaluation trap, no localCheckpoint needed), no driver
-        # broadcast build, and the window's (band, bkey) exchange is the
-        # exact partitioning the bucket join consumes — one Exchange per
-        # side in the dumped plan
-        w = Window.partitionBy("band", "bkey")
-        return (
-            keyed.withColumn("__bc", F.count(F.lit(1)).over(w))
-            .where(F.col("__bc") <= max_block_size)
-            .drop("__bc")
-        )
-
-    ka = cap(band_keys(sig_a, "rid_a"))
-    kb = cap(band_keys(sig_b, "rid_b"))
+    ka, kb = _cap_blocks_two_sided(band_keys(sig_a, "rid_a"),
+                                   band_keys(sig_b, "rid_b"),
+                                   ["band", "bkey"], max_block_size)
     return (
         ka.join(kb, ["band", "bkey"])
         .groupBy("rid_a", "rid_b")
@@ -401,25 +305,18 @@ def minhash_blocks_verified(clean: DataFrame, dirty: DataFrame,
 
 
 def build_candidates(clean: DataFrame, dirty: DataFrame,
-                     use_exact: bool = True, use_snm: bool = True,
-                     use_minhash: bool = True, snm_window: int = 3,
-                     minhash_hashes: int = 16, minhash_bands: int = 8,
-                     max_block_size: int = 200) -> DataFrame:
+                     use_minhash: bool = True) -> DataFrame:
     """Union of all blocking strategies, deduped to (rid_a, rid_b).
 
     ``block`` keeps the first strategy that produced the pair (for
     diagnostics); dedup is a groupBy on the pair key — map-side partial
-    aggregation keeps the shuffle small.
+    aggregation keeps the shuffle small. ``use_minhash=False`` keeps the
+    exact + sorted-neighborhood core (the cross-engine oracles' plan).
     """
-    parts = []
-    if use_exact:
-        parts.append(exact_blocks(clean, dirty, max_block_size=max_block_size))
-    if use_snm:
-        parts.append(sorted_neighborhood_blocks(clean, dirty, window=snm_window))
+    parts = [exact_blocks(clean, dirty, max_block_size=200),
+             sorted_neighborhood_blocks(clean, dirty)]
     if use_minhash:
-        parts.append(minhash_blocks(clean, dirty, n_hashes=minhash_hashes,
-                                    bands=minhash_bands,
-                                    max_block_size=max_block_size))
+        parts.append(minhash_blocks(clean, dirty, max_block_size=200))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

@@ -16,15 +16,14 @@ Pages-domain feature family (SURVEY.md §7.5):
 - length ratio, lang equality (the gender/race-style categorical);
 - warc_ts delta in days (dob analogue).
 
-Everything except JW is built-in (codegen); JW is one Arrow-batched
-pandas UDF over the (already blocked) pair table. At 100 TB the pair
-table is repartitioned on the blocking key first so each Arrow batch is
-one block (`SURVEY.md §4`).
+Pair-level features are built-in expressions (codegen) except JW, one
+Arrow-batched pandas UDF over the (already blocked) pair table. The
+per-row shingle payload comes from one vectorized ``mapInArrow`` kernel
+(``functions/arrowhash.py``); the ``exact_shingles`` verification mode
+builds it with built-in expressions instead.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -43,10 +42,6 @@ from rlerrorgenerator_spark.functions.similarity import (
 )
 from rlerrorgenerator_spark.linkage.blocking import normalize_url
 
-
-def _arrow_kernels_enabled() -> bool:
-    return os.environ.get("SPARK_GRAFT_ARROW_KERNELS", "1") != "0"
-
 PAIR_COLS = ["url", "lang", "warc_ts"]
 TEXT_PREFIX = 64
 
@@ -59,10 +54,10 @@ def attach_pair_attrs(candidates: DataFrame, clean: DataFrame, dirty: DataFrame,
     Shingle arrays are computed here, ONCE PER ROW on each side before the
     pair join — computing them inside the pair-level feature expressions
     would redo the array construction per candidate pair. They are stored
-    as HASHED shingles (array<long>): 8-byte elements instead of ~25-byte
-    strings through the join, and the later array_intersect/array_union
-    compare longs, not strings. No array_distinct (O(n²) on big string
-    arrays); intersect/union already emit set semantics.
+    as HASHED shingles, so the join ships fixed-width numbers instead of
+    ~25-byte strings: by default the sampled, sorted-distinct 32-bit
+    payload of ``arrowhash.sampled_shingles32`` (array<int>), with
+    ``exact_shingles=True`` the full 64-bit sets (array<long>).
 
     The sided projections are SLIM: full texts never enter the pair join
     — only the 64-char prefix, the length, and the hashed shingles
@@ -71,86 +66,46 @@ def attach_pair_attrs(candidates: DataFrame, clean: DataFrame, dirty: DataFrame,
 
     def sided(df: DataFrame, key_col: str, alias: str) -> DataFrame:
         k = 4
-        if not exact_shingles and _arrow_kernels_enabled():
-            # Vectorized fast path (functions/arrowhash.py): the three
-            # HOF transforms + sample filter below are CodegenFallback —
-            # interpreted, boxing, ~35% of the 4-core leg's execution
-            # samples (JFR, round 4). One mapInArrow computes the sampled
-            # 32-bit shingle payload in a handful of numpy passes; every
-            # other _sided_select expression stays JVM codegen.
-            from rlerrorgenerator_spark.functions.arrowhash import (
-                sided_shingle_batches,
-            )
-
-            cols = list(dict.fromkeys([key_col, *PAIR_COLS]))  # url is both
-            pre = df.select(
-                *cols, F.coalesce("text", F.lit("")).alias("text"),
-            )
-            out_schema = StructType(
-                pre.schema.fields
-                + [StructField("__sh", ArrayType(IntegerType()), True),
-                   StructField("__shs", BooleanType(), True)]
-            )
-            mapped = pre.mapInArrow(
-                lambda it: sided_shingle_batches(it, text_col="text",
-                                                 shingle_k=k),
-                out_schema,
-            )
-            return _sided_select(mapped, key_col, alias,
-                                 F.col("__sh"), F.col("__shs"))
-        # STRING-FREE shingle hashing: hash each token once, then derive
-        # the k-shingle hash from k consecutive token hashes with one
-        # multi-arg xxhash64 — no slice/concat string building. Building
-        # shingle STRINGS (concat_ws(slice(toks))) measured ~45s of a 55s
-        # score stage at 60k rows; this form is pure long arithmetic over
-        # a bound array attribute (no recompute inside the lambda).
-        step = df.withColumn(
-            "__toks__", F.split(F.coalesce("text", F.lit("")), " ")
-        ).withColumn("__th__", F.transform(F.col("__toks__"), lambda t: F.xxhash64(t)))
-        n = F.greatest(F.size("__th__") - F.lit(k - 1), F.lit(1))
-        # try_element_at: docs shorter than k tokens yield nulls past the
-        # end, which xxhash64 skips — same set semantics, no ANSI throw
-        hashed = F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: F.xxhash64(*[F.try_element_at(F.col("__th__"), i + j)
-                                   for j in range(k)]),
-        )
-        # Deterministic 1-in-4 shingle subsample (keep h % 4 == 0): when
-        # BOTH sides are sampled the pair Jaccard over the samples is an
-        # unbiased estimate of the true shingle Jaccard (MinHash-style
-        # subsampling) — and the pair shuffle ships 4× fewer array bytes,
-        # the dominant bandwidth cost of scoring.
-        # Short documents keep the FULL array: near the 20-token body
-        # floor a doc has ~17 shingles → ~4 sampled, a high-variance (or
-        # empty → jaccard forced to 0) estimate exactly where the gated
-        # content evidence matters most. Below 32 shingles the bandwidth
-        # saving is noise anyway, so exact Jaccard costs nothing. A
-        # ``shs_*`` flag records which form shipped so add_features can
-        # symmetrize mixed full-vs-sampled pairs at the 32 boundary.
         if exact_shingles:
             # verification mode (the cross-engine e2e oracle): full
             # 64-bit shingle-hash sets, no subsample, no truncation —
             # |intersect|/|union| equals the exact string-shingle Jaccard
-            # an independent engine computes (modulo ~2⁻⁶⁴ collisions)
-            use_sample = F.lit(False)
-            hashed_out = hashed
-            return _sided_select(step, key_col, alias, hashed_out, use_sample)
-        use_sample = F.size(hashed) >= 32
-        # ship 32-bit shingle hashes through the pair shuffle: the arrays
-        # are the dominant scoring-shuffle payload and truncating 64→32
-        # bits halves those bytes; at ≤ ~400 shingles/doc the extra
-        # collision probability is ~n²/2³³ ≈ 2e-5 — invisible next to the
-        # 1-in-4 sampling variance the Jaccard estimate already carries.
-        # shiftright(…, 32) keeps the (uniform) high word and always fits
-        # int, so the cast cannot throw under ANSI. The 1-in-4 subsample
-        # keys off the TRUNCATED value so add_features' mixed-pair
-        # symmetrization (pmod over the shipped ints) selects exactly the
-        # same elements the row-side filter kept.
-        hashed32 = F.transform(hashed, lambda h: F.shiftright(h, 32).cast("int"))
-        hashed_out = F.when(
-            use_sample, F.filter(hashed32, lambda h: F.pmod(h, F.lit(4)) == 0)
-        ).otherwise(hashed32)
-        return _sided_select(step, key_col, alias, hashed_out, use_sample)
+            # an independent engine computes (modulo ~2⁻⁶⁴ collisions).
+            # String-free: hash each token once, then derive the k-shingle
+            # hash from k consecutive token hashes with one multi-arg
+            # xxhash64; try_element_at yields nulls past the end of docs
+            # shorter than k tokens, which xxhash64 skips.
+            step = df.withColumn(
+                "__th__",
+                F.transform(F.split(F.coalesce("text", F.lit("")), " "),
+                            lambda t: F.xxhash64(t)),
+            )
+            n = F.greatest(F.size("__th__") - F.lit(k - 1), F.lit(1))
+            hashed = F.transform(
+                F.sequence(F.lit(1), n),
+                lambda i: F.xxhash64(*[F.try_element_at(F.col("__th__"), i + j)
+                                       for j in range(k)]),
+            )
+            return _sided_select(step, key_col, alias, hashed, F.lit(False))
+        # sampled 32-bit shingle payload (arrowhash.sampled_shingles32);
+        # every other _sided_select expression stays JVM codegen
+        from rlerrorgenerator_spark.functions.arrowhash import (
+            sided_shingle_batches,
+        )
+
+        cols = list(dict.fromkeys([key_col, *PAIR_COLS]))  # url is both
+        pre = df.select(*cols, F.coalesce("text", F.lit("")).alias("text"))
+        out_schema = StructType(
+            pre.schema.fields
+            + [StructField("__sh", ArrayType(IntegerType()), True),
+               StructField("__shs", BooleanType(), True)]
+        )
+        mapped = pre.mapInArrow(
+            lambda it: sided_shingle_batches(it, text_col="text", shingle_k=k),
+            out_schema,
+        )
+        return _sided_select(mapped, key_col, alias,
+                             F.col("__sh"), F.col("__shs"))
 
     a = sided(clean, "url", "a")
     b = sided(dirty, "rid", "b")
@@ -191,19 +146,24 @@ def add_features(pairs: DataFrame, exact_shingles: bool = False) -> DataFrame:
         F.filter(F.col("sh_b"), lambda h: F.pmod(h, F.lit(4)) == 0),
     ).otherwise(F.col("sh_b"))
     inter = F.size(F.array_intersect(eff_a, eff_b)).cast("double")
-    if exact_shingles or not _arrow_kernels_enabled():
+    lang_b = F.substring(F.coalesce("lang_b", F.lit("")), 1, TEXT_PREFIX)
+    if exact_shingles:
+        # verification mode: the arrays carry duplicates and the DuckDB
+        # re-derivation computes the set union; true (uncapped) distances
         union = F.size(F.array_union(eff_a, eff_b)).cast("double")
+        url_lev_abs = F.least(
+            F.levenshtein(un_a, un_b),
+            F.levenshtein(F.lower("url_a"), F.lower("url_b")),
+        ).cast("double")
+        text_lev = norm_levenshtein(tp_a, tp_b)
+        swap_lev = norm_levenshtein(tp_a, lang_b)
     else:
         # kernel-path arrays are already DEDUPED per side (arrowhash
         # emits sorted distinct values), so |a ∪ b| = |a| + |b| − |a ∩ b|
         # — array_union's second per-pair hash-set build is pure waste
         # (OpenHashSet get/rehash measured ~4% of the 4-core leg's JFR
-        # samples). The exact_shingles oracle path keeps array_union:
-        # its arrays carry duplicates and its DuckDB re-derivation
-        # computes the set union.
+        # samples).
         union = (F.size(eff_a) + F.size(eff_b)).cast("double") - inter
-    fast = not exact_shingles and _arrow_kernels_enabled()
-    if fast:
         # Bounded Levenshtein (early-exit O(n·t)) wherever the score's
         # consumers gate the value anyway — see norm_levenshtein_capped.
         # url_lev_abs: the score zeroes url evidence beyond 3 edits and
@@ -218,16 +178,7 @@ def add_features(pairs: DataFrame, exact_shingles: bool = False) -> DataFrame:
         # text/swap prefix distances are gated at 0.25 × the 64-char
         # prefix = 16 edits
         text_lev = norm_levenshtein_capped(tp_a, tp_b, 16)
-        swap_lev = norm_levenshtein_capped(
-            tp_a, F.substring(F.coalesce("lang_b", F.lit("")), 1, TEXT_PREFIX), 16)
-    else:
-        url_lev_abs = F.least(
-            F.levenshtein(un_a, un_b),
-            F.levenshtein(F.lower("url_a"), F.lower("url_b")),
-        ).cast("double")
-        text_lev = norm_levenshtein(tp_a, tp_b)
-        swap_lev = norm_levenshtein(
-            tp_a, F.substring(F.coalesce("lang_b", F.lit("")), 1, TEXT_PREFIX))
+        swap_lev = norm_levenshtein_capped(tp_a, lang_b, 16)
     return (
         pairs.withColumn("metric_url_jw", jaro_winkler_udf(un_a, un_b))
         .withColumn("metric_url_lev", norm_levenshtein(un_a, un_b))
@@ -323,18 +274,15 @@ def score_pairs(candidates: DataFrame, clean: DataFrame, dirty: DataFrame,
     ``exact_shingles=True`` scores with full unsampled shingle sets
     (exact Jaccard; the cross-engine verification mode).
 
-    Scored-output contract, Arrow-kernel fast path (the default,
-    ``SPARK_GRAFT_ARROW_KERNELS`` unset or ``1``): the persisted distance
+    Scored-output contract (default mode): the persisted distance
     metrics are CAPPED at their score gates — ``metric_url_lev_abs``
     saturates at 4 (the score zeroes url evidence beyond 3 edits) and
     ``metric_text_lev`` / ``metric_swap_lev`` report 1.0 for any raw
     prefix distance > 16 (the 0.25 × 64-char gate). ``match_prob`` and
     ``prediction`` are provably unchanged by the caps (every consumer
     gates below them), but anything downstream that treats these three
-    columns as TRUE normalized distances must either use the
-    ``exact_shingles``/expression path or tolerate the saturated range;
-    a cross-mode diff of the scored table will show divergent metric
-    values on capped pairs by design."""
+    columns as TRUE normalized distances must either score with
+    ``exact_shingles=True`` or tolerate the saturated range."""
     out = add_match_prob(add_features(
         attach_pair_attrs(candidates, clean, dirty, exact_shingles),
         exact_shingles))

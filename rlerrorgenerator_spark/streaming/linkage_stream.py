@@ -19,10 +19,9 @@ trigger is O(batch), never O(history).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
+from rlerrorgenerator_spark.checkpoint import is_committed
 from rlerrorgenerator_spark.linkage.incremental import link_increment
 
 _EMPTY_CLUSTERS = "id string, cluster_id string"
@@ -33,9 +32,10 @@ def fold_batch(clean: DataFrame, batch: DataFrame, clusters_dir: str,
                exact_shingles: bool = False) -> None:
     """One incremental fold: read the prior clusters table (empty on
     first batch), link the batch against clean, atomically replace the
-    clusters table. Pure batch function — usable outside streaming."""
+    clusters table. Pure batch function — usable outside streaming.
+    ``clusters_dir`` may be a plain path or any Hadoop URI."""
     spark = batch.sparkSession
-    if os.path.exists(os.path.join(clusters_dir, "_SUCCESS")):
+    if is_committed(spark, clusters_dir):
         prior = spark.read.parquet(clusters_dir)
     else:
         prior = spark.createDataFrame([], _EMPTY_CLUSTERS)

@@ -9,6 +9,7 @@ the full-recompute run's."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from rlerrorgenerator_spark.linkage.blocking import build_candidates
@@ -69,11 +70,14 @@ def test_increment_from_empty_prior(spark):
     assert got == want
 
 
-def test_stream_increment_equals_full(spark, tmp_path):
+@pytest.mark.parametrize("uri", [False, True], ids=["path", "file_uri"])
+def test_stream_increment_equals_full(spark, tmp_path, uri):
     # Structured Streaming fold: dirty rows arrive as parquet files, one
     # micro-batch per file (maxFilesPerTrigger=1). The final clusters
     # table must equal the monolithic relink REGARDLESS of how the file
-    # source split the rows into batches.
+    # source split the rows into batches — and whether the clusters
+    # table lives at a plain path or a Hadoop URI (each fold must find
+    # the prior table either way, or earlier batches are dropped).
     from rlerrorgenerator_spark.streaming.linkage_stream import stream_link_increment
 
     clean = prep_pages(
@@ -94,6 +98,8 @@ def test_stream_increment_equals_full(spark, tmp_path):
         .parquet(input_dir)
     )
     clusters_dir = str(tmp_path / "clusters")
+    if uri:
+        clusters_dir = (tmp_path / "clusters").as_uri()
     q = stream_link_increment(clean, stream, clusters_dir,
                               str(tmp_path / "ckpt"))
     assert q.awaitTermination(600)

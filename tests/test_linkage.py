@@ -267,48 +267,17 @@ def test_shingle_jaccard_mixed_sample_boundary(spark):
     assert row2["metric_text_jaccard"] == 1.0
 
 
-def test_cap_forms_produce_identical_pairs(spark, monkeypatch):
-    """The window-count cap (default) and the broadcast-blacklist cap
-    (SPARK_GRAFT_WINDOW_CAPS=0) must yield the SAME candidate pair set —
-    the two physical strategies implement one logical skew guard."""
-    from rlerrorgenerator_spark.linkage.blocking import (
-        exact_blocks,
-        minhash_blocks,
-    )
-
-    rows_c, rows_d = [], []
-    for i in range(30):
-        txt = ("shared boilerplate text block " * 3 if i % 3 == 0
-               else f"unique document body number {i} with words w{i} x{i}")
-        rows_c.append((f"https://h{i % 7}.com/p/{i}", txt))
-        rows_d.append((f"d:{i:04d}", f"https://h{i % 7}.com/p/{i}", txt))
-    clean = spark.createDataFrame(rows_c, "url string, text string")
-    dirty = spark.createDataFrame(rows_d, "rid string, url string, text string")
-
-    def pairs():
-        ex = {(r.rid_a, r.rid_b) for r in
-              exact_blocks(clean, dirty, max_block_size=5).collect()}
-        mh = {(r.rid_a, r.rid_b) for r in
-              minhash_blocks(clean, dirty, max_block_size=5).collect()}
-        return ex, mh
-
-    monkeypatch.setenv("SPARK_GRAFT_WINDOW_CAPS", "1")
-    ex_w, mh_w = pairs()
-    monkeypatch.setenv("SPARK_GRAFT_WINDOW_CAPS", "0")
-    ex_b, mh_b = pairs()
-    assert ex_w == ex_b and mh_w == mh_b
-    assert ex_w and mh_w  # non-degenerate fixture
-
-
 def test_hot_block_cap_drops_giant_buckets(spark):
     """Skew guard: a block key shared by > max_block_size rows on either
     side is dropped entirely (boilerplate/empty-text protection), while
-    normal-sized blocks keep their pairs — for the exact strategy and the
-    md5-verified MinHash-LSH strategy alike."""
+    normal-sized blocks keep their pairs — for the exact strategy, the
+    production MinHash-LSH strategy (Arrow kernel signatures) and the
+    md5-verified one alike."""
     from pyspark.sql import types as T
 
     from rlerrorgenerator_spark.linkage.blocking import (
         exact_blocks,
+        minhash_blocks,
         minhash_blocks_verified,
     )
 
@@ -323,10 +292,11 @@ def test_hot_block_cap_drops_giant_buckets(spark):
     clean = spark.createDataFrame(rows_c, "url string, text string")
     dirty = spark.createDataFrame(rows_d, "rid string, url string, text string")
 
-    mh = minhash_blocks_verified(clean, dirty, max_block_size=8).collect()
-    got = {(r.rid_a, r.rid_b) for r in mh}
-    assert ("https://h.com/uniq", "d:uniq") in got
-    assert not any("boiler" in a for a, _ in got)
+    for strategy in (minhash_blocks, minhash_blocks_verified):
+        mh = strategy(clean, dirty, max_block_size=8).collect()
+        got = {(r.rid_a, r.rid_b) for r in mh}
+        assert ("https://h.com/uniq", "d:uniq") in got, strategy.__name__
+        assert not any("boiler" in a for a, _ in got), strategy.__name__
 
     # exact strategy: same cap semantics on the url_norm / text keys
     ex = exact_blocks(clean.withColumn("lang", F.lit("en")),
