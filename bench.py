@@ -1,17 +1,18 @@
 #!/usr/bin/env python
 """Benchmark harness.
 
-Runs the headline queries on ``$SPARK_GRAFT_SF_DIR`` (default
+Runs the flagship linkage pipeline on ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) at ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON
 line ``{"metric": ..., "value": N, "unit": "sec", "queries": {...},
 "sf": ...}``.
 
-The headline metric is end-to-end wall time; ``queries`` carries
-per-query seconds plus the north-rule evidence:
+The headline metric ``end_to_end_sec`` is the wall time of one
+``er_pipeline`` run, also reported under ``queries``. The line carries:
 
-- ``er_pipeline``: the flagship linkage run (inject → block → score →
-  metrics) — its throughput in candidate-pairs/sec is reported under
-  ``pairs_per_sec``;
+- ``er_pipeline``: the flagship linkage run over pages derived from the
+  ``documents`` table (inject → block → score → metrics) — its
+  throughput in candidate-pairs/sec is reported under
+  ``er_pairs_per_sec``;
 - scaling efficiency: the SAME ER pipeline job (identical input,
   identical shuffle partitioning) run at local[N] and local[4N]
   subprocesses; ``scaling_efficiency = throughput(4N)/(4·throughput(N))``
@@ -448,44 +449,19 @@ def main() -> None:
         print(f"[bench-phase] {name} t+{time.time() - t_start:.1f}s",
               file=sys.stderr, flush=True)
 
-    import __spark_entry__ as entry_mod
-
     _phase("imports")
     spark = _fresh_spark(cpus)
     _phase("session")
-    queries: dict[str, float] = {}
-    headline = [
-        "q1_pricing_summary", "q3_shipping_priority", "q5_region_revenue",
-        "events_type_stats", "top_users_by_value",
-        "doc_quality", "doc_langid", "dup_exact_groups", "dup_ngram_jaccard",
-        "dup_minhash", "dup_simhash", "ann_cosine_topk",
-    ]
-    # module functions, not the curated queries() dict: the driver window
-    # caps queries() at 50 entries, but the bench keeps timing the same
-    # 13 workloads as rounds 1-3 for cross-round comparability
-    # JVM/codegen/Arrow spin-up happens once per session; without this the
-    # first headline query absorbs ~3-4s of it and the per-query numbers
-    # aren't comparable across positions in the list
-    _warmup(spark)
-    _phase("warmup")
-    for name in headline:
-        t0 = time.time()
-        df = getattr(entry_mod, name)(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        queries[name] = round(time.time() - t0, 3)
-    _phase("headline-queries")
-
-    t0 = time.time()
+    # _run_er_pipeline warms the session up before its timed region
     er = _run_er_pipeline(spark, sf_dir)
-    queries["er_pipeline"] = round(er["sec"], 3)
     _phase("er-pipeline")
 
-    total = round(sum(queries.values()), 3)
+    sec = round(er["sec"], 3)
     out = {
         "metric": "end_to_end_sec",
-        "value": total,
+        "value": sec,
         "unit": "sec",
-        "queries": queries,
+        "queries": {"er_pipeline": sec},
         "sf": sf,
         "er_candidate_pairs": er["n_candidates"],
         "er_pairs_per_sec": round(er["pairs_per_sec"], 1),

@@ -14,9 +14,9 @@ idiomatic PySpark:
   (reference: ``benchmarking/utils.R:502-645,189-311,426-470``);
 - evaluation metrics (F1/precision/recall/Brier) (``linkage/metrics.py``,
   reference: ``benchmarking/utils.R:1005-1081``);
-- large-scale training-data utilities: dedup (exact / MinHash / SimHash /
-  n-gram Jaccard), ANN similarity search, text analysis, multimodal
-  plumbing (``functions/``, ``plans/``).
+- single-table document dedup (exact / n-gram Jaccard / MinHash /
+  SimHash) and the text features it uses (``linkage/dedup.py``,
+  ``functions/textops.py``).
 
 Everything is DataFrame-first: Catalyst plans + built-in functions on the
 hot path, Arrow-batched pandas UDFs where string surgery is unavoidable,

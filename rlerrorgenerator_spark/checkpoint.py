@@ -20,7 +20,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
@@ -68,30 +67,15 @@ class CheckpointManager:
             reader = reader.schema(schema)
         return reader.load(self._path(name))
 
-    def stage(self, df: DataFrame, name: str, partition_by: list[str] | None = None,
-              with_partition_metrics: bool = False) -> DataFrame:
+    def stage(self, df: DataFrame, name: str) -> DataFrame:
         """Materialize ``df`` as stage ``name`` (skip if already written)
         and return the durable re-read. Volatile mode → localCheckpoint.
 
         A parquet stage is re-read with ``df``'s schema, so the reload
         runs no schema-inference job; Iceberg loads from its metadata.
-        ``with_partition_metrics`` also writes per-partition row counts to
-        ``<name>__metrics`` (north rule: per-partition lineage + metrics).
         """
         if self.base_dir is None:
             return df.localCheckpoint(eager=True)
-        # partitionBy moves the partition columns to the end of the
-        # stored schema; let the reader resolve those
-        schema = df.schema if self.fmt == "parquet" and not partition_by else None
         if not self.exists(name):
-            w = df.write.mode("overwrite").format(self.fmt)
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.save(self._path(name))
-            if with_partition_metrics:
-                out = self.load(name, schema)
-                (out.groupBy(F.spark_partition_id().alias("partition_id"))
-                    .count()
-                    .write.mode("overwrite").format(self.fmt)
-                    .save(self._path(name + "__metrics")))
-        return self.load(name, schema)
+            df.write.mode("overwrite").format(self.fmt).save(self._path(name))
+        return self.load(name, df.schema if self.fmt == "parquet" else None)

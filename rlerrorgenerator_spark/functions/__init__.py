@@ -1,4 +1,6 @@
-"""Scalar/vectorized function library: string similarity, text analysis."""
+"""Scalar/vectorized function library: string similarity, text
+features, Arrow hashing kernels, distributed ranks and group-count
+statistics."""
 
 from rlerrorgenerator_spark.functions.similarity import (
     jaro_winkler,

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import Column
 
+from rlerrorgenerator_spark.functions.textops import exploded_shingles
+
 
 def normalize_url(col) -> Column:
     """Lowercase, strip scheme + www + trailing slash — the link-key
@@ -253,6 +255,36 @@ def minhash_blocks(clean: DataFrame, dirty: DataFrame, text_col: str = "text",
     )
 
 
+def _md5_u64(col, salt: str):
+    """Bytes 8..16 of md5(salt || value), big-endian, as a zero-padded
+    20-digit decimal STRING — bit-identical to DuckDB's
+    ``lpad((('0x' || substring(md5(salt || g), 17, 16))::UBIGINT)::varchar,
+    20, '0')``, which is what makes the MinHash signature oracle-checkable
+    cross-engine. String min == numeric min due to fixed-width padding."""
+    return F.lpad(
+        F.conv(F.substring(F.md5(F.concat(F.lit(salt), col)), 17, 16), 16, 10),
+        20, "0",
+    )
+
+
+def minhash_signatures(df: DataFrame, text_col: str = "text",
+                       id_col: str = "doc_id", n_hashes: int = 12,
+                       k: int = 5) -> DataFrame:
+    """(id, mh_0..mh_{n-1}) md5 MinHash signature over word-k-shingles."""
+    # explode + one groupBy with n min-aggs: the array-expression form
+    # (array_min(transform(...)) per hash) triggers Catalyst projection
+    # collapse, inlining the shingle construction into each of the n
+    # expressions (n× recompute per row).
+    sh = exploded_shingles(
+        df.select(F.col(id_col).alias("id"), text_col), text_col, ["id"], k
+    )
+    aggs = [
+        F.min(_md5_u64(F.col("g"), f"mh{i}|")).alias(f"mh_{i}")
+        for i in range(n_hashes)
+    ]
+    return sh.groupBy("id").agg(*aggs)
+
+
 def minhash_blocks_verified(clean: DataFrame, dirty: DataFrame,
                             text_col: str = "text", n_hashes: int = 12,
                             bands: int = 6, shingle_k: int = 5,
@@ -260,7 +292,7 @@ def minhash_blocks_verified(clean: DataFrame, dirty: DataFrame,
     """MinHash-LSH blocking in VERIFICATION mode: the same plan shape as
     :func:`minhash_blocks` (per-side signatures → one band-struct explode
     → band equi-join → hot-bucket cap → pair dedup), but hashing with the
-    md5-u64 discipline of ``plans.dedup.minhash_signatures`` so an
+    md5-u64 discipline of :func:`minhash_signatures` so an
     independent SQL engine reproduces every bucket key bit-identically.
     The Arrow-kernel :func:`minhash_blocks` stays the production blocking;
     this variant is what the driver's cross-engine oracle exercises
@@ -269,8 +301,6 @@ def minhash_blocks_verified(clean: DataFrame, dirty: DataFrame,
     The hot-bucket cap groups on (band, bkey) — the md5 band keys carry
     no band salt, so capping on ``bkey`` alone (safe for the salted
     xxhash keys) could conflate buckets across bands here."""
-    from rlerrorgenerator_spark.plans.dedup import minhash_signatures
-
     rows_per_band = n_hashes // bands
     sig_a = minhash_signatures(
         clean.select(F.col("url").alias("rid"), text_col),

@@ -8,12 +8,15 @@ runs, each as a DataFrame plan:
 2. n-gram Jaccard: word-k-shingles, inverted-index self-join on shingle,
    jaccard = |∩| / (|A|+|B|−|∩|). Selective shingles (k=5 words) keep the
    join sparse; hot shingles capped like hot blocks.
-3. MinHash-LSH: signature bands → bucket join (see linkage/blocking.py
-   for the pages-table variant; this one hashes with md5 so DuckDB can
-   oracle it bit-for-bit).
+3. MinHash-LSH: signature bands → bucket join over the md5 signatures
+   of ``linkage/blocking.py::minhash_signatures`` (the clean × dirty
+   variant is ``minhash_blocks_verified`` there), so DuckDB can oracle
+   it bit-for-bit.
 4. SimHash: 64-bit sketch, hamming-distance pairs via band join.
 
-Embedding near-dup (cosine) lives in plans/ann.py.
+Deduplication is record linkage of one table against itself; the
+transitive grouping of the pairs is ``linkage/resolve.py``'s
+connected components.
 """
 
 from __future__ import annotations
@@ -25,6 +28,7 @@ from pyspark.sql import functions as F
 
 from rlerrorgenerator_spark.functions.textops import (
     exploded_shingles, fingerprint, tokens)
+from rlerrorgenerator_spark.linkage.blocking import minhash_signatures
 
 
 def exact_dup_groups(df: DataFrame, text_col: str = "text",
@@ -91,36 +95,6 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-
-
-def _md5_u64(col, salt: str):
-    """Bytes 8..16 of md5(salt || value), big-endian, as a zero-padded
-    20-digit decimal STRING — bit-identical to DuckDB's
-    ``lpad((('0x' || substring(md5(salt || g), 17, 16))::UBIGINT)::varchar,
-    20, '0')``, which is what makes the MinHash signature oracle-checkable
-    cross-engine. String min == numeric min due to fixed-width padding."""
-    return F.lpad(
-        F.conv(F.substring(F.md5(F.concat(F.lit(salt), col)), 17, 16), 16, 10),
-        20, "0",
-    )
-
-
-def minhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", n_hashes: int = 12,
-                       k: int = 5) -> DataFrame:
-    """(id, mh_0..mh_{n-1}) MinHash signature over word-k-shingles."""
-    # explode + one groupBy with n min-aggs: the array-expression form
-    # (array_min(transform(...)) per hash) triggers Catalyst projection
-    # collapse, inlining the shingle construction into each of the n
-    # expressions (n× recompute per row).
-    sh = exploded_shingles(
-        df.select(F.col(id_col).alias("id"), text_col), text_col, ["id"], k
-    )
-    aggs = [
-        F.min(_md5_u64(F.col("g"), f"mh{i}|")).alias(f"mh_{i}")
-        for i in range(n_hashes)
-    ]
-    return sh.groupBy("id").agg(*aggs)
 
 
 def minhash_dup_pairs(df: DataFrame, text_col: str = "text",

@@ -1,6 +1,5 @@
-"""Sources: deterministic synthetic pages table + parquet/testdata readers."""
+"""Sources: the deterministic synthetic pages and persons tables."""
 
 from rlerrorgenerator_spark.sources.pages import extract_text, synth_pages
-from rlerrorgenerator_spark.sources.testdata import load_table, load_tables
 
-__all__ = ["synth_pages", "extract_text", "load_table", "load_tables"]
+__all__ = ["synth_pages", "extract_text"]

@@ -1,16 +1,8 @@
-"""Structured Streaming ingest for the pages table.
+"""Streaming incremental linkage.
 
-The reference is pure batch R (SURVEY.md §2.9: no streaming constructs),
-and the north rule is batch too — this module is the engine's ingest
-surface for continuously-arriving crawl data: the same pages schema,
-watermarked streaming dedup and windowed per-host metrics, runnable
-incrementally (``availableNow``) or continuously.
+``linkage_stream`` folds a stream of dirty-page batches into the
+clusters table, one micro-batch at a time: ``fold_batch`` links a batch
+against the clean table and the committed clusters, and
+``stream_link_increment`` drives it from a Structured Streaming source
+via ``foreachBatch``.
 """
-
-from rlerrorgenerator_spark.streaming.ingest import (
-    host_window_counts,
-    stream_dedup_pages,
-    stream_pages,
-)
-
-__all__ = ["stream_pages", "stream_dedup_pages", "host_window_counts"]

@@ -25,8 +25,7 @@ def main() -> int:
         .getOrCreate()
     )
     con = duckdb.connect()
-    for t in ("documents", "customer", "orders", "lineitem", "events",
-              "region", "nation", "supplier", "part", "embeddings"):
+    for t in ("documents", "customer"):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
